@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hpat_jl_spark.operators.iterative import min_root_components
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two array<float> columns, in
@@ -122,6 +124,33 @@ def knn_bruteforce(
     )
 
 
+def cosine_pairs(ids, vecs, threshold: float, block: int = 2048):
+    """(id_a, id_b, cosine_sim) arrays for every row pair i < j of one
+    in-memory bucket whose cosine, rounded to 6 places, is > threshold.
+    ``ids`` must be ascending, so id_a < id_b. One blocked numpy gram
+    matrix: blocks bound the memory to block×n doubles. Rows are
+    unit-normalized in double with the zero-norm guard, so a zero
+    vector scores 0 against everything and never pairs. Pure numpy:
+    the per-bucket body of :func:`neardup_pairs` and of
+    :func:`semantic_dedup_bucket`."""
+    ids = np.asarray(ids)
+    n = len(ids)
+    if n < 2:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.empty(0, dtype=np.float64)
+    M = _unit_rows(np.vstack(vecs).astype(np.float64))
+    cols = np.arange(n)
+    ia, ib, sims = [], [], []
+    for s in range(0, n, block):
+        e = min(s + block, n)
+        S = np.round(M[s:e] @ M.T, 6)  # (block, n)
+        r, c = np.nonzero((S > threshold) & (cols > np.arange(s, e)[:, None]))
+        ia.append(ids[s + r])
+        ib.append(ids[c])
+        sims.append(S[r, c])
+    return np.concatenate(ia), np.concatenate(ib), np.concatenate(sims)
+
+
 def neardup_pairs(
     df: DataFrame,
     bucket_col: str = "label",
@@ -129,48 +158,54 @@ def neardup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.9,
     block: int = 2048,
-    keep_bucket: bool = False,
 ) -> DataFrame:
     """All within-bucket pairs with cosine > threshold, via applyInPandas
-    per bucket: one blocked numpy gram matrix per group instead of a
-    pair-exploded join (the Column-expression pair join evaluates an
-    interpreted 64-term fold per pair — ~10× slower). Blocks bound the
-    memory to block×group_size doubles. Output ids ordered id_a < id_b.
-    ``keep_bucket`` prepends the bucket column (late r12: lets
-    bucket-local consumers — semantic_dedup_components' per-bucket
-    union-find — group the pairs again without a re-derivation join)."""
-    import numpy as np
-
-    out_schema = "id_a long, id_b long, cosine_sim double"
-    if keep_bucket:
-        btype = dict(df.dtypes)[bucket_col]
-        out_schema = f"{bucket_col} {btype}, " + out_schema
+    per bucket: one blocked numpy gram matrix per group
+    (:func:`cosine_pairs`) instead of a pair-exploded join (the
+    Column-expression pair join evaluates an interpreted 64-term fold
+    per pair — ~10× slower). Output ids ordered id_a < id_b."""
 
     def kernel(pdf):
-        bval = pdf[bucket_col].iloc[0] if len(pdf) else None
         pdf = pdf.sort_values(id_col, ignore_index=True)
-        ids = pdf[id_col].to_numpy()
-        M = _unit_rows(np.vstack(pdf[vec_col].to_numpy()).astype(np.float64))
-        n = len(ids)
-        ia, ib, sims = [], [], []
-        for s in range(0, n, block):
-            e = min(s + block, n)
-            S = np.round(M[s:e] @ M.T, 6)  # (block, n)
-            for bi in range(e - s):
-                i = s + bi
-                row = S[bi, i + 1 :]
-                hits = np.nonzero(row > threshold)[0]
-                if hits.size:
-                    ia.extend([ids[i]] * hits.size)
-                    ib.extend(ids[i + 1 + hits])
-                    sims.extend(row[hits])
-        out = {"id_a": ia, "id_b": ib, "cosine_sim": sims}
-        if keep_bucket:
-            out = {bucket_col: [bval] * len(ia), **out}
-        return pd.DataFrame(out)
+        ia, ib, sims = cosine_pairs(
+            pdf[id_col].to_numpy(), pdf[vec_col].to_numpy(), threshold, block
+        )
+        return pd.DataFrame({"id_a": ia, "id_b": ib, "cosine_sim": sims})
 
     return df.select(bucket_col, id_col, vec_col).groupBy(bucket_col).applyInPandas(
-        kernel, out_schema
+        kernel, "id_a long, id_b long, cosine_sim double"
+    )
+
+
+def semantic_dedup_bucket(pdf: pd.DataFrame, threshold: float) -> pd.DataFrame:
+    """(vertex, component) for ONE bucket (columns vec_id, embedding)
+    of SemDeDup-style clustering: every vector joined to another by a
+    chain of cosine > threshold pairs, labeled with its cluster's min
+    id. Pure numpy/pandas — the whole per-bucket body of
+    plans/similarity.semantic_dedup_components.
+
+    Identical vectors score cosine exactly 1.0 and share every cross
+    neighbor, so the gram runs over one REPRESENTATIVE per distinct
+    vector (byte identity; the min id, since rows are sorted by id) and
+    each copy rejoins by a rep→copy STAR edge. Stars give the same
+    vertex set and connectivity as the full pair clique at O(n) rather
+    than O(n²) edges. Zero vectors get no stars: the gram's zero-norm
+    guard scores them 0 everywhere (never > threshold), so their copies
+    must not link either. A single-row bucket emits no rows."""
+    pdf = pdf.sort_values("vec_id", ignore_index=True)
+    ids = pdf["vec_id"].to_numpy()
+    if len(ids) < 2:
+        return min_root_components([], [])
+    V = np.ascontiguousarray(np.vstack(pdf["embedding"].to_numpy()))
+    keys = V.view(np.dtype((np.void, V.dtype.itemsize * V.shape[1]))).ravel()
+    _, first, inverse = np.unique(keys, return_index=True, return_inverse=True)
+    rep = first[inverse.ravel()]  # row index of each row's representative
+    is_rep = rep == np.arange(len(ids))
+    ia, ib, _ = cosine_pairs(ids[is_rep], V[is_rep], threshold)
+    star = ~is_rep & (V != 0).any(axis=1)
+    return min_root_components(
+        np.concatenate([ia, ids[rep[star]]]),
+        np.concatenate([ib, ids[star]]),
     )
 
 

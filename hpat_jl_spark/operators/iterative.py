@@ -13,6 +13,8 @@ fixpoint).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -121,40 +123,53 @@ def bucketed_components(
     bucket is an IVF cell / LSH band, sized by construction). For a
     graph with genuinely cross-bucket edges use connected_components().
     """
-    import pandas as pd
-
-    def kernel(pdf):
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in zip(pdf[src].to_numpy(), pdf[dst].to_numpy()):
-            a, b = int(a), int(b)
-            if a not in parent:
-                parent[a] = a
-            if b not in parent:
-                parent[b] = b
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra  # attach larger root under smaller:
-                #                  every root stays its set's MIN id
-        verts = list(parent)
-        return pd.DataFrame(
-            {"vertex": verts, "component": [find(v) for v in verts]}
-        )
-
     return (
         edges.select(bucket_col, src, dst)
         .groupBy(bucket_col)
-        .applyInPandas(kernel, "vertex long, component long")
+        .applyInPandas(
+            lambda pdf: min_root_components(pdf[src], pdf[dst]),
+            "vertex long, component long",
+        )
+    )
+
+
+def min_root_components(src, dst) -> pd.DataFrame:
+    """(vertex, component) over one in-memory edge list: union-find
+    with union-by-min-root, so every set's root stays its MINIMUM
+    member and component = min vertex id — the labeling of the global
+    min-label fixpoint (connected_components) on the same edges.
+    Membership is every vertex an edge touches; a self-loop makes its
+    vertex a singleton member. Pure Python/pandas: the per-bucket body
+    of :func:`bucketed_components` and of the fused SemDeDup kernel
+    (functions/similarity.semantic_dedup_bucket)."""
+    parent: dict = {}
+
+    def find(x):
+        r = x
+        while parent[r] != r:
+            r = parent[r]
+        while parent[x] != r:
+            parent[x], x = r, parent[x]
+        return r
+
+    for a, b in zip(np.asarray(src), np.asarray(dst)):
+        a, b = int(a), int(b)
+        if a not in parent:
+            parent[a] = a
+        if b not in parent:
+            parent[b] = b
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra  # attach larger root under smaller:
+            #                  every root stays its set's MIN id
+    verts = list(parent)
+    return pd.DataFrame(
+        {
+            "vertex": np.array(verts, dtype=np.int64),
+            "component": np.array([find(v) for v in verts], dtype=np.int64),
+        }
     )
 
 

@@ -27,28 +27,12 @@ def _doc_text_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cores. On the single-row-group bench fixtures the scan reports 1
     split and every core but one starves; on split-rich input (the
     staged ×10/×100 tiers, any real lake layout) the exchange of raw
-    text costs more than it parallelizes and is skipped. The split
-    count comes from session.scan_split_count — file listing + footers,
-    not ``.rdd.getNumPartitions()`` (ADVICE r12: the .rdd call forces
-    physical planning at plan-construction time and would run jobs
-    during build if an exchange were ever composed upstream, breaking
-    the prepared-query zero-jobs bench contract)."""
-    from hpat_jl_spark.session import (
-        scan_split_count,
-        sized_shuffle_partitions,
-        starved_scan_pin_width,
-    )
-    from hpat_jl_spark.tables import table_path
+    text costs more than it parallelizes and is skipped (the pin
+    itself: session.pin_starved_scan)."""
+    from hpat_jl_spark.session import pin_starved_scan
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    width = starved_scan_pin_width(
-        scan_split_count(spark, table_path(sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
-    )
-    if width is not None:
-        docs = docs.repartition(width, "doc_id")
-    return docs
+    return pin_starved_scan(docs, sf_dir, "documents", "doc_id")
 
 
 def _word_grams(

@@ -147,10 +147,16 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_cluster's shingle-space clustering. Cluster membership
     includes every vertex touched by a pair (size ≥ 2 by construction).
 
-    Physical shape (late r6 — the distinct-signature discipline from
-    minhash/simhash applied to embeddings): the per-bucket gram kernel
-    is O(n²) FLOPs in bucket size, so verbatim duplicate vectors make
-    it quadratic in duplicate multiplicity (the ×10 tier's 10-way
+    Physical shape: one pass. Every step — representative dedup, gram
+    kernel, star edges, union-find — is local to a label bucket, so
+    the whole chain is ONE shuffle on label feeding ONE Arrow kernel
+    (semantic_dedup_components), then the summary aggregate. No step
+    needs its own exchange, cache or Python stage.
+
+    Why representatives (late r6 — the distinct-signature discipline
+    from minhash/simhash applied to embeddings): the per-bucket gram
+    kernel is O(n²) FLOPs in bucket size, so verbatim duplicate vectors
+    make it quadratic in duplicate multiplicity (the ×10 tier's 10-way
     replicas measured the worst growth in SCALING.md, 5.7×/decade).
     Identical vectors have cosine exactly 1.0 — they pair with each
     other and share every cross neighbor — so the kernel runs over one
@@ -162,10 +168,9 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     their copies must not link either. The oracle replays the FULL
     pair set + recursive-CTE fixpoint, which gates the equivalence.
 
-    Scale: rep pairs come from the bucketed gram kernel over distinct
-    content only (never all-pairs, never duplicate-inflated); the CC
-    iterates over the edges only (operators/iterative —
-    lineage-truncated per round); the summary is one aggregate."""
+    Scale: the per-task residency is one bucket (at 100 TB an IVF cell
+    / LSH band, sized by construction); the gram covers distinct
+    content only (never all-pairs, never duplicate-inflated)."""
     emb = load_table(spark, "embeddings", sf_dir)
     comp = semantic_dedup_components(emb)
     return comp.groupBy(F.col("component").alias("canonical_id")).agg(
@@ -175,69 +180,29 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def semantic_dedup_components(emb: DataFrame) -> DataFrame:
     """(vertex, component) for every vector in a >θ-cosine near-dup
-    cluster, via rep-level gram kernel + star expansion — the body of
-    embedding_dedup_clusters (see its docstring for the equivalence
-    argument); split out so planted-duplicate tests can drive it with
-    a constructed frame. Expects columns (label, vec_id, embedding).
+    cluster — the body of embedding_dedup_clusters (see its docstring
+    for the equivalence argument); split out so planted-duplicate tests
+    can drive it with a constructed frame. Expects columns
+    (label, vec_id, embedding).
 
-    r12, in two steps. First the fixpoint moved to REP-level pairs
-    with star copies attached post-hoc (the distinct-content
-    discipline applied to the ITERATION: a cluster's min vertex is
-    always a rep, since the rep is the min vec_id of its (label, fp)
-    group — ×100 wall 14.9 → 9.5 s). Then the fixpoint was removed
-    entirely: every edge here — gram-kernel pair or star — lives
-    inside ONE label bucket by construction, so the components
-    decompose per bucket and operators/iterative.bucketed_components
-    computes them in a single shuffle + Arrow union-find kernel. The
-    ~20 sequential propagation rounds (one Spark action each) that
-    profiled as the structural wall at every tier rediscovered a
-    partition the bucketing already proves. The general fixpoint
-    remains for genuinely cross-bucket graphs (shingle-band clusters,
-    repeat-pair CC)."""
-    from pyspark import StorageLevel
-
-    from hpat_jl_spark.operators.iterative import bucketed_components
-
-    base = emb.select(
-        "label",
-        "vec_id",
-        "embedding",
-        F.md5(F.to_json(F.struct("embedding"))).alias("fp"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    grp = base.groupBy("label", "fp").agg(
-        F.min(F.struct("vec_id", "embedding")).alias("r")
-    )
-    reps = grp.select(
-        "label",
-        F.col("r.vec_id").alias("vec_id"),
-        F.col("r.embedding").alias("embedding"),
-    )
-    rep_pairs = S.neardup_pairs(
-        reps, bucket_col="label", threshold=_NEARDUP_THRESHOLD,
-        keep_bucket=True,
-    ).select("label", "id_a", "id_b")
-    stars = (
-        base.select("label", "fp", "vec_id")
-        .join(
-            grp.select(
-                "label",
-                "fp",
-                F.col("r.vec_id").alias("rep_id"),
-                F.exists("r.embedding", lambda x: x != 0).alias("nonzero"),
-            ),
-            ["label", "fp"],
+    One ``groupBy(label).applyInPandas`` pass: per bucket,
+    functions/similarity.semantic_dedup_bucket sorts by vec_id, keeps
+    the min-id representative of each identical vector, runs the
+    blocked cosine gram over the representatives (the same
+    cosine_pairs as embedding_neardup), adds rep→copy stars for
+    non-zero vectors and closes them with the min-root union-find of
+    operators/iterative.bucketed_components. The components decompose
+    per bucket because every edge — gram pair or star — lives inside
+    one label by construction; the general fixpoint remains for
+    genuinely cross-bucket graphs (shingle-band clusters, repeat-pair
+    CC)."""
+    return (
+        emb.select("label", "vec_id", "embedding")
+        .groupBy("label")
+        .applyInPandas(
+            lambda pdf: S.semantic_dedup_bucket(pdf, _NEARDUP_THRESHOLD),
+            "vertex long, component long",
         )
-        .filter(F.col("nonzero") & (F.col("vec_id") != F.col("rep_id")))
-        .select(
-            "label",
-            F.col("rep_id").alias("id_a"),
-            F.col("vec_id").alias("id_b"),
-        )
-    )
-    # membership = every vertex touched by a pair OR a star edge; the
-    # union feeds one per-bucket union-find (edges never cross labels).
-    return bucketed_components(
-        rep_pairs.unionByName(stars), "label", "id_a", "id_b"
     )
 
 

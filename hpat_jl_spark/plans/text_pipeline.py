@@ -69,17 +69,11 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough that the pin buys nothing locally, and at split-rich scale
     a blanket exchange of raw text is pure tax, so the conditional
     form is the only shape with no losing tier."""
-    from hpat_jl_spark.session import scan_split_count, sized_shuffle_partitions
-    from hpat_jl_spark.tables import table_path
+    from hpat_jl_spark.session import pin_starved_scan
 
-    docs = load_table(spark, "documents", sf_dir)
-    width = _starved_scan_pin_width(
-        scan_split_count(spark, table_path(sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
+    docs = pin_starved_scan(
+        load_table(spark, "documents", sf_dir), sf_dir, "documents", "doc_id"
     )
-    if width is not None:
-        docs = docs.repartition(width, "doc_id")
     staged = docs.select(
         "doc_id",
         "text",
@@ -668,7 +662,8 @@ HAVING count(DISTINCT doc_id) >= 2
 
 
 # Shared policy for conditionally pinning a light-compute raw-text
-# stream — see session.starved_scan_pin_width for the measurements.
+# stream (applied via session.pin_starved_scan) — see
+# session.starved_scan_pin_width for the measurements.
 from hpat_jl_spark.session import starved_scan_pin_width as _starved_scan_pin_width
 
 
@@ -702,25 +697,15 @@ def duplicate_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial-countDistinct ran in ONE task — 341 ms of the 0.72 s
     # in-jobs at sf0.1). Unlike benchmark_decontaminate/bpe_encode the
     # chunker's compute is too light to dwarf an exchange of raw text
-    # on a split-rich input — see _starved_scan_pin_width. r13: the
-    # split count now comes from session.scan_split_count (file
-    # listing + parquet footers, row-group-capped) instead of
-    # docs.rdd.getNumPartitions() — the .rdd call forced physical
-    # planning at plan-construction time (ADVICE r12), and the
-    # reported count OVERSTATES effective parallelism on large
-    # single-row-group files (r7 trap) exactly where the pin most
-    # needs to fire; the footer-based count is capped correctly there.
-    from hpat_jl_spark.session import scan_split_count, sized_shuffle_partitions
-    from hpat_jl_spark.tables import table_path
+    # on a split-rich input — see _starved_scan_pin_width.
+    from hpat_jl_spark.session import pin_starved_scan
 
-    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    width = _starved_scan_pin_width(
-        scan_split_count(spark, table_path(sf_dir, "documents")),
-        spark.sparkContext.defaultParallelism,
-        sized_shuffle_partitions(sf_dir),
+    docs = pin_starved_scan(
+        load_table(spark, "documents", sf_dir).select("doc_id", "text"),
+        sf_dir,
+        "documents",
+        "doc_id",
     )
-    if width is not None:
-        docs = docs.repartition(width, "doc_id")
     chunks = X.chunk_documents(docs, chunk_size=50, stride=25)
     return (
         chunks.filter(F.col("n_chunk_tokens") == 50)

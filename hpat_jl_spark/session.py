@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -61,6 +61,7 @@ def sized_shuffle_partitions(
 # immutable per directory (the load_table cache's assumption); conf-
 # dependent packing is recomputed per call so a probe that re-tunes
 # maxPartitionBytes (scaling_probe stages do) still gets fresh counts.
+# tables.invalidate_table_cache() clears it with the table cache.
 _SCAN_LISTING_CACHE: dict[str, tuple[list[int], int]] = {}
 
 
@@ -187,6 +188,27 @@ def starved_scan_pin_width(
     if scan_parts * 4 >= default_parallelism:
         return None
     return max(default_parallelism, sized_parts)
+
+
+def pin_starved_scan(df: DataFrame, sf_dir: str, table: str, key: str) -> DataFrame:
+    """``df``, a stream over fixture ``table`` of ``sf_dir``,
+    hash-repartitioned by ``key`` when that table's scan is
+    split-starved (starved_scan_pin_width), else ``df`` unchanged — the
+    one copy of the conditional pin for light-compute raw-text streams.
+    The split count comes from scan_split_count (file listing +
+    footers), not ``.rdd.getNumPartitions()``: the .rdd call forces
+    physical planning at plan-construction time and would run jobs
+    during build if an exchange were ever composed upstream, breaking
+    the prepared-query zero-jobs bench contract."""
+    from hpat_jl_spark.tables import table_path
+
+    spark = df.sparkSession
+    width = starved_scan_pin_width(
+        scan_split_count(spark, table_path(sf_dir, table)),
+        spark.sparkContext.defaultParallelism,
+        sized_shuffle_partitions(sf_dir),
+    )
+    return df if width is None else df.repartition(width, key)
 
 
 def get_spark(

@@ -156,7 +156,13 @@ _TABLE_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def invalidate_table_cache() -> None:
+    """Forget every resolved table AND session.scan_split_count's
+    file-listing memo, which rests on the same immutable-path
+    assumption — after a rewrite both must see the new files."""
+    from hpat_jl_spark.session import _SCAN_LISTING_CACHE
+
     _TABLE_CACHE.clear()
+    _SCAN_LISTING_CACHE.clear()
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:

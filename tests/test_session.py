@@ -85,3 +85,31 @@ def test_row_group_cap_fires_on_synthetic_single_group(spark, tmp_path):
     finally:
         for k, v in prev.items():
             spark.conf.set(k, v)
+
+
+def test_invalidate_table_cache_refreshes_split_count(spark, tmp_path):
+    """scan_split_count memoizes each path's listing; a rewrite with
+    more row groups is seen once tables.invalidate_table_cache() runs."""
+    import pyarrow as pa
+
+    from hpat_jl_spark.tables import invalidate_table_cache
+
+    f = str(tmp_path / "rewritten.parquet")
+    n = 200_000
+    tbl = pa.table({"x": pa.array(range(n)), "s": pa.array(["y" * 40] * n)})
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set(keys[0], "65536b")
+        spark.conf.set(keys[1], "1024b")
+        pq.write_table(tbl, f, row_group_size=n)
+        assert scan_split_count(spark, f) == 1
+        pq.write_table(tbl, f, row_group_size=n // 4)
+        assert pq.ParquetFile(f).metadata.num_row_groups == 4
+        invalidate_table_cache()
+        reported = spark.read.parquet(f).rdd.getNumPartitions()
+        assert reported >= 4
+        assert scan_split_count(spark, f) == 4
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)

@@ -556,3 +556,102 @@ def test_semantic_dedup_star_expansion_equals_full_pairs(spark):
     # cluster of {2,100,101,102,200}; zero vectors clustered nowhere
     assert frozenset({2, 100, 101, 102, 200}) in got_sets
     assert all(300 not in s and 301 not in s for s in got_sets)
+
+
+# ---- the fused per-bucket SemDeDup kernel, driven with pandas only ----
+
+
+def _bucket(rows):
+    """One label bucket as the Arrow kernel receives it: float32
+    embeddings (the table's array<float>), rows in arbitrary order."""
+    import numpy as np
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "label": [0] * len(rows),
+            "vec_id": [vid for vid, _ in rows],
+            "embedding": [np.asarray(v, dtype=np.float32) for _, v in rows],
+        }
+    ).iloc[::-1]
+
+
+def _clusters(out):
+    got = {}
+    for v, c in zip(out["vertex"], out["component"]):
+        got.setdefault(int(c), set()).add(int(v))
+    return got
+
+
+@pytest.fixture
+def gram_rows(monkeypatch):
+    """Records how many rows each cosine_pairs call scored."""
+    seen = []
+    real = S.cosine_pairs
+
+    def spy(ids, vecs, threshold, block=2048):
+        seen.append(len(ids))
+        return real(ids, vecs, threshold, block)
+
+    monkeypatch.setattr(S, "cosine_pairs", spy)
+    return seen
+
+
+def test_semantic_dedup_bucket_clique_and_bridge_is_one_cluster(gram_rows):
+    """A 4-way verbatim clique plus a near neighbour of it forms ONE
+    cluster labeled with its min id; the gram scores only the distinct
+    vectors (the copies rejoin as stars), and a far vector stays out."""
+    import numpy as np
+
+    v = np.array([1.0, 0.2, 0.0, 0.0])
+    near = v + np.array([0.0, 0.0, 0.05, 0.0])
+    far = np.array([0.0, 0.0, 0.0, 1.0])
+    rows = [(7, v), (3, v), (12, v), (9, v), (20, near), (5, far)]
+    out = S.semantic_dedup_bucket(_bucket(rows), threshold=0.9)
+    assert _clusters(out) == {3: {3, 7, 9, 12, 20}}
+    assert gram_rows == [3]  # reps 3, 5, 20 — not all six rows
+
+
+def test_semantic_dedup_bucket_zero_copies_never_cluster(gram_rows):
+    """Identical zero vectors are one representative, score 0 against
+    everything (the zero-norm guard) and get no star edges."""
+    zero = [0.0, 0.0, 0.0, 0.0]
+    rows = [(1, zero), (2, zero), (3, zero), (4, [1.0, 0.0, 0.0, 0.0])]
+    out = S.semantic_dedup_bucket(_bucket(rows), threshold=0.4)
+    assert len(out) == 0
+    assert gram_rows == [2]
+
+
+def test_semantic_dedup_bucket_single_row_emits_nothing():
+    out = S.semantic_dedup_bucket(_bucket([(42, [0.3, 0.4])]), threshold=0.4)
+    assert list(out.columns) == ["vertex", "component"]
+    assert len(out) == 0
+
+
+def test_semantic_dedup_bucket_only_duplicates_is_one_star(gram_rows):
+    """A bucket holding copies of one vector is a single star around
+    its min id, found without a single scored pair."""
+    v = [0.6, 0.8, 0.0]
+    out = S.semantic_dedup_bucket(
+        _bucket([(8, v), (4, v), (6, v)]), threshold=0.9
+    )
+    assert _clusters(out) == {4: {4, 6, 8}}
+    assert gram_rows == [1]
+
+
+def test_embedding_dedup_clusters_is_one_arrow_pass(spark):
+    """Plan shape, a count that does not depend on the epoch: the whole
+    rep-dedup → gram → star → union-find chain is ONE Arrow kernel
+    behind ONE shuffle on label (the second exchange is the summary
+    aggregate), and nothing is cached."""
+    from hpat_jl_spark import registry
+    from tests.conftest import SF_SMOKE
+
+    registry.load_all_plans()
+    df = registry.REGISTRY["embedding_dedup_clusters"].fn(spark, SF_SMOKE)
+    df.collect()
+    adaptive = df._jdf.queryExecution().executedPlan()
+    plan = adaptive.executedPlan().toString()  # AQE's final plan only
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+    assert "InMemoryRelation" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
